@@ -23,7 +23,7 @@ print(e.entry(s).collect())"
 scaleprobe:        # repeatable 100x gate: regen .scale/sf10 if absent, run the
 	python scripts/scale_probe.py   # probe families, fail on wall-ratio regression
 
-digests:           # regen the staleness manifest AFTER bumping LAST_CHANGED
+digests:           # regen the evidence manifest after a code edit or a new CORRECTNESS_rNN.json
 	python scripts/update_source_digests.py
 
 regen-goldens:     # deterministic fixtures (commit alongside semantic changes)

@@ -25,11 +25,9 @@ def materialize_training_shards(
     this is computed from target file size, see ``compact_parquet``),
     ``_MANIFEST.json`` at the root with the content fingerprint.
     Returns the manifest."""
-    from ..plans.pipelineq import dataset_split_assign
+    from ..plans.pipelineq import corpus_materialize_clean, dataset_split_assign
 
-    from ..plans import REGISTRY
-
-    clean = REGISTRY["corpus_materialize_clean"].spark(spark, sf_dir)
+    clean = corpus_materialize_clean(spark, sf_dir)
     splits = dataset_split_assign(spark, sf_dir).select("doc_id", "split")
     # corpus_materialize_clean applies every cleaning gate but NO split
     # restriction (only the decontamination doc_id >= DECON_EVAL_DOCS

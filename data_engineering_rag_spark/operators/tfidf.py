@@ -68,17 +68,19 @@ class TfidfModel:
     With ``persist=True`` the tables are cached (MEMORY_AND_DISK) for
     the build-once/score-many lifecycle — exactly the reference's
     ``Index.fit`` → repeated ``search`` loop. Call ``unpersist`` when
-    done."""
+    done: it also releases the per-field tf tables ``build_tfidf``
+    persists with or without ``persist=True``."""
 
     weights: DataFrame  # field, <key_cols...>, term, w  (L2-normalized)
     idf: DataFrame  # field, term, idf
     key_cols: list[str]
     text_fields: list[str]
     token_mode: str = "ascii"  # query-side tokenization must match the build
+    tf_tables: tuple[DataFrame, ...] = ()  # per-field tf caches the weights read
 
     def unpersist(self) -> None:
-        self.weights.unpersist()
-        self.idf.unpersist()
+        for table in (self.weights, self.idf, *self.tf_tables):
+            table.unpersist()
 
 
 def _tokens(
@@ -183,6 +185,7 @@ def build_tfidf(
 
     per_field = []
     idf_tables = []
+    tf_tables = []
     for field in text_fields:
         # Narrow per-row run-length counting — the raw token stream
         # never shuffles. The repartition on the doc key pre-satisfies
@@ -208,6 +211,7 @@ def build_tfidf(
         tf = _term_frequencies(df, key_cols, field, pattern).repartition(
             *[F.col(c) for c in key_cols]
         ).persist(StorageLevel.MEMORY_AND_DISK)
+        tf_tables.append(tf)
         dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
         # n_docs enters as a LITERAL: same long arithmetic as the old
         # 1-row-table crossJoin ((1 + N) and max_df·N over int64), so
@@ -260,6 +264,7 @@ def build_tfidf(
         key_cols=key_cols,
         text_fields=text_fields,
         token_mode=token_mode,
+        tf_tables=tuple(tf_tables),
     )
 
 

@@ -889,9 +889,9 @@ def tfidf_keywords_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     here."""
     from pyspark.sql.window import Window
 
-    from . import REGISTRY
+    from .rag import tfidf_doc_weights
 
-    w = REGISTRY["tfidf_doc_weights"].spark(spark, sf_dir)
+    w = tfidf_doc_weights(spark, sf_dir)
     win = Window.partitionBy("doc_id").orderBy(F.col("w").desc(), "term")
     return (
         w.withColumn("rn", F.row_number().over(win).cast("long"))

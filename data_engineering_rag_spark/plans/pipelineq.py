@@ -746,19 +746,17 @@ def corpus_materialize_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow map; decontamination's gram join broadcasts the tiny eval
     side; the final assembly is two equi-joins + one broadcast anti
     join on ids."""
-    from . import REGISTRY as _R
-
     d = load(spark, sf_dir, "documents")
-    canon = _R["dedup_canonical_docs"].spark(spark, sf_dir).select(
+    canon = dedup_canonical_docs(spark, sf_dir).select(
         F.col("content_md5"), F.col("keep_doc_id").alias("doc_id")
     )
     passing = (
-        _R["gopher_quality_rules"].spark(spark, sf_dir)
+        gopher_quality_rules(spark, sf_dir)
         .where(F.col("passes_all"))
         .select("doc_id")
     )
     flagged = (
-        _R["decontaminate_overlap"].spark(spark, sf_dir)
+        decontaminate_overlap(spark, sf_dir)
         .select(F.col("train_doc_id").alias("doc_id"))
         .distinct()
     )

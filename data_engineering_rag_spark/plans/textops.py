@@ -698,9 +698,9 @@ def dedup_clusters_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     algorithms, one answer."""
     from ..operators.dedup_cluster import connected_components
 
-    from . import REGISTRY as _R
+    from .relational import fuzzy_levenshtein_pairs
 
-    edges = _R["fuzzy_levenshtein_pairs"].spark(spark, sf_dir).select(
+    edges = fuzzy_levenshtein_pairs(spark, sf_dir).select(
         F.col("part_a").alias("src"), F.col("part_b").alias("dst")
     )
     comp = connected_components(edges)

@@ -295,7 +295,8 @@ def _jaccard_r17b(lenfilter, cand_join, posfilter=False):
             .withColumn("pos", F.row_number().over(wdoc.orderBy(F.col("df"), F.col("h"))))
             .withColumn("sz", F.count(F.lit(1)).over(wdoc))
         )
-        pref_cols = ["doc_id", "h"] + (["sz"] if lenfilter else []) + (
+        need_sz = lenfilter or posfilter  # both filters compare sizes
+        pref_cols = ["doc_id", "h"] + (["sz"] if need_sz else []) + (
             ["pos"] if posfilter else []
         )
         prefix = ordered.where(
@@ -307,13 +308,13 @@ def _jaccard_r17b(lenfilter, cand_join, posfilter=False):
         pa = prefix.select(
             F.col("doc_id").alias("doc_a"),
             "h",
-            *([F.col("sz").alias("sza")] if lenfilter else []),
+            *([F.col("sz").alias("sza")] if need_sz else []),
             *([F.col("pos").alias("pa")] if posfilter else []),
         )
         pb = prefix.select(
             F.col("doc_id").alias("doc_b"),
             "h",
-            *([F.col("sz").alias("szb")] if lenfilter else []),
+            *([F.col("sz").alias("szb")] if need_sz else []),
             *([F.col("pos").alias("pb")] if posfilter else []),
         )
         if cand_join != "broadcast":

@@ -1,14 +1,16 @@
 #!/usr/bin/env python
-"""Vanilla-session dry-run of the driver's 50-slot correctness window.
+"""Vanilla-session oracle check of the 50-slot correctness window (the
+first 50 REGISTRY entries), or of the named queries.
 
 Mimics the driver exactly: builds a VANILLA SparkSession (no repo
 session factory, no extra confs — each query must self-provision its
 dynamic confs), takes the first 50 REGISTRY entries in their shipped
-order, runs each against /root/testdata/sf0.01, and oracle-compares
-the ones that carry DuckDB SQL. Prints one line per query and a final
-summary; exit 1 on any failure.
+order (or the queries named on the command line), runs each against
+the sf0.01 test tables, and oracle-compares the ones that carry DuckDB
+SQL. Prints one line per query and a final summary; exit 1 on any
+failure.
 
-Usage: python scripts/dryrun_window.py [--sf DIR] [--n N]
+Usage: python scripts/dryrun_window.py [--sf DIR] [name ...]
 """
 import sys
 import time
@@ -18,25 +20,27 @@ sys.path.insert(0, "tests")
 
 from pyspark.sql import SparkSession
 
+WINDOW = 50
 sf_dir = "/root/testdata/sf0.01"
-n_slots = 50
+names = []
 args = sys.argv[1:]
 while args:
     a = args.pop(0)
     if a == "--sf":
         sf_dir = args.pop(0)
-    elif a == "--n":
-        n_slots = int(args.pop(0))
+    else:
+        names.append(a)
 
 from data_engineering_rag_spark.plans import REGISTRY
 from oracle_harness import compare, duckdb_conn
+
+window = [(n, REGISTRY[n]) for n in names] or list(REGISTRY.items())[:WINDOW]
 
 # Vanilla, driver-style: master only, everything else default.
 spark = SparkSession.builder.master("local[8]").getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
 con = duckdb_conn(sf_dir)
 
-window = list(REGISTRY.items())[:n_slots]
 fails = []
 t_all = time.time()
 for i, (name, spec) in enumerate(window):

@@ -1,52 +1,102 @@
-"""Registry hygiene: every oracle query must have driver-side
-correctness evidence — a green row in some CORRECTNESS_r*.json — or be
-scheduled for it (sit inside the next driver window, the first ~50
-registry entries). Guards future additions against silently shipping
-oracle queries that never meet the driver's gate."""
+"""Registry evidence: plans/source_digests.json must mirror the
+CORRECTNESS_r*.json rows and the code on disk, and the correctness
+window (the first 50 registry entries) must go to the queries that
+need evidence: stale ones first, then oracle queries no run has
+passed."""
 
 from __future__ import annotations
 
+import ast
 import glob
+import importlib
 import json
 import os
-
 import re
+import sys
+import textwrap
 
-from data_engineering_rag_spark.plans import (
-    _DRIVER_VERIFIED_BY_ROUND,
-    DRIVER_EVIDENCE_ROUND,
-    LAST_CHANGED,
-    REGISTRY,
-)
+from data_engineering_rag_spark.plans import REGISTRY, QuerySpec
+from data_engineering_rag_spark.plans.evidence import is_stale, load_manifest, source_digests
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DRIVER_WINDOW = 50
 
 
-def _driver_rows_by_round() -> dict[int, set[str]]:
-    rows: dict[int, set[str]] = {}
+def _newest_green_round() -> dict[str, int]:
+    """Per query, the newest round whose CORRECTNESS row passed every check."""
+    newest: dict[str, int] = {}
     for path in glob.glob(os.path.join(REPO_ROOT, "CORRECTNESS_r*.json")):
         rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
         with open(path) as f:
-            rows[rnd] = set(json.load(f))
-    return rows
+            for name, row in json.load(f).items():
+                if row["err"] is None and row["rows_match"] and row["schema_match"] and row["hash_match"]:
+                    newest[name] = max(rnd, newest.get(name, 0))
+    return newest
 
 
-def _driver_rows() -> set[str]:
-    names: set[str] = set()
-    for per_round in _driver_rows_by_round().values():
-        names |= per_round
-    return names
+def _checked() -> set[str]:
+    return {n for n, row in load_manifest().items() if row["evidence"] is not None}
 
 
 def _stale() -> set[str]:
-    """Queries rewritten after their latest driver row — they re-earn
-    evidence with window priority (VERDICT r5 item 1)."""
-    latest: dict[str, int] = {}
-    for rnd, names in sorted(_driver_rows_by_round().items()):
-        for n in names:
-            latest[n] = rnd
-    return {n for n, rnd in LAST_CHANGED.items() if rnd > latest.get(n, 0)}
+    return {n for n, row in load_manifest().items() if is_stale(row)}
+
+
+def test_manifest_rows_match_registry():
+    manifest = load_manifest()
+    missing = sorted(set(REGISTRY) - set(manifest))
+    dead = sorted(set(manifest) - set(REGISTRY))
+    assert not missing, f"queries missing from source_digests.json: {missing}"
+    assert not dead, f"manifest rows for removed queries: {dead}"
+
+
+def test_manifest_evidence_matches_correctness_files():
+    """Both directions: every recorded evidence round is the newest
+    green row on disk, and no green row on disk is left un-ingested.
+    Fix by running scripts/update_source_digests.py."""
+    on_disk = {n: r for n, r in _newest_green_round().items() if n in REGISTRY}
+    recorded = {
+        n: row["evidence"]["round"]
+        for n, row in load_manifest().items()
+        if row["evidence"] is not None
+    }
+    wrong = {n: (r, on_disk.get(n)) for n, r in recorded.items() if on_disk.get(n) != r}
+    uningested = {n: r for n, r in on_disk.items() if n not in recorded}
+    assert not wrong, f"manifest evidence round vs newest green row on disk: {wrong}"
+    assert not uningested, f"green CORRECTNESS rows not in the manifest: {uningested}"
+
+
+def test_source_digests_current():
+    """The manifest's digest is the code on disk: an edit to a query,
+    a helper it reaches or a constant it reads is recorded, so the
+    query turns stale against its evidence. Fix by running
+    scripts/update_source_digests.py and committing the manifest."""
+    manifest = load_manifest()
+    drifted = sorted(
+        n for n, d in source_digests(REGISTRY.values()).items()
+        if n in manifest and manifest[n]["digest"] != d
+    )
+    assert not drifted, f"manifest digests out of date: {drifted}"
+
+
+def test_queries_compose_by_direct_call():
+    """source_digests follows names, so a query that runs another query
+    through ``REGISTRY[name].spark`` would keep its digest when the
+    other query changes. Package code must call the query function
+    directly (``@query`` returns it unchanged)."""
+    pkg = os.path.join(REPO_ROOT, "data_engineering_rag_spark")
+    lookups = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        lookups += [
+            f"{os.path.relpath(path, REPO_ROOT)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute)
+            and node.attr == "spark"
+            and isinstance(node.value, (ast.Subscript, ast.Call))
+        ]
+    assert not lookups, f"queries run through a registry lookup: {lookups}"
 
 
 def test_every_oracle_query_has_driver_evidence_or_window_slot():
@@ -56,7 +106,7 @@ def test_every_oracle_query_has_driver_evidence_or_window_slot():
     overflow legitimately waits a round. What may never happen: a
     wasted slot (rows-only or fresh-verified entry) inside the window
     while an oracle query without evidence sits outside it."""
-    checked = _driver_rows()
+    checked = _checked()
     names = list(REGISTRY)
     window, rest = names[:DRIVER_WINDOW], names[DRIVER_WINDOW:]
     stale = _stale()
@@ -78,10 +128,10 @@ def test_every_oracle_query_has_driver_evidence_or_window_slot():
 
 def test_window_prioritizes_unchecked_oracle_queries():
     """No FRESH-verified query may occupy a window slot while an
-    unchecked oracle query waits outside. Stale rewrites are exempt:
+    unchecked oracle query waits outside. Stale queries are exempt:
     re-earning evidence for changed code outranks first evidence for
-    new code (VERDICT r5 item 1)."""
-    checked = _driver_rows()
+    new code."""
+    checked = _checked()
     names = list(REGISTRY)
     window, rest = names[:DRIVER_WINDOW], names[DRIVER_WINDOW:]
     waiting = [n for n in rest if REGISTRY[n].oracle is not None and n not in checked]
@@ -95,187 +145,90 @@ def test_window_prioritizes_unchecked_oracle_queries():
     )
 
 
-def test_in_code_evidence_map_matches_correctness_files():
-    """The static _DRIVER_VERIFIED_BY_ROUND map in plans/__init__.py
-    must mirror the CORRECTNESS_r*.json files on disk, so the reorder
-    logic and the staleness gate can't drift from reality. Rounds on
-    disk but not in code (a new round just landed) are reported so the
-    map gets updated next session."""
-    on_disk = _driver_rows_by_round()
-    for rnd, names in _DRIVER_VERIFIED_BY_ROUND.items():
-        assert rnd in on_disk, f"code claims round {rnd} evidence but no CORRECTNESS_r{rnd:02d}.json"
-        extra = names - on_disk[rnd]
-        assert not extra, f"code claims round-{rnd} rows absent from the file: {sorted(extra)}"
-
-
 def test_rewritten_queries_have_fresh_evidence_or_window_slot():
-    """Staleness gate (VERDICT r5 item 2): a query whose body was
-    materially rewritten (LAST_CHANGED) must have a driver-green row
-    from that round or later — or sit inside the next driver window so
-    the evidence gets re-earned. Prevents rewritten-after-evidence
-    queries from silently keeping pre-rewrite rows as their only hard
-    signal."""
-    by_round = _driver_rows_by_round()
-    latest: dict[str, int] = {}
-    for rnd, names in sorted(by_round.items()):
-        for n in names:
-            latest[n] = rnd
+    """Staleness gate: an oracle query whose digest changed after its
+    newest green CORRECTNESS row must sit inside the next window, so
+    the next run re-checks the changed code before its old row is read
+    as evidence."""
     window = set(list(REGISTRY)[:DRIVER_WINDOW])
-    stale = [
-        name
-        for name, changed in LAST_CHANGED.items()
-        if name in REGISTRY
-        and REGISTRY[name].oracle is not None
-        and latest.get(name, 0) < changed
-        and name not in window
-    ]
-    assert not stale, (
-        "queries rewritten after their latest driver row, and not "
-        f"scheduled in the next window: {stale}"
+    outside = sorted(
+        n for n in _stale() if REGISTRY[n].oracle is not None and n not in window
+    )
+    assert not outside, (
+        f"queries changed after their newest green row, and not "
+        f"scheduled in the next window: {outside}"
     )
 
 
-def test_last_changed_names_exist():
-    unknown = [n for n in LAST_CHANGED if n not in REGISTRY]
-    assert not unknown, f"LAST_CHANGED references unknown queries: {unknown}"
-    unknown_ev = [n for n in DRIVER_EVIDENCE_ROUND if n not in REGISTRY]
-    assert not unknown_ev, f"evidence map references unknown queries: {unknown_ev}"
+_QUERIES = '''
+    from . import kern
 
 
-def test_last_changed_has_no_duplicate_literal_keys():
-    """A duplicate key in the LAST_CHANGED dict literal is silently
-    last-wins: deleting what looks like a stray later duplicate would
-    revert the staleness gate to the older round with no error
-    anywhere (found by the round-11 review: the near-dup entry
-    appeared at both 7 and 11). Parse the source and forbid it."""
-    import ast
-    import inspect
+    def q(spark, sf_dir):
+        """Query docstring."""
+        return spark.range(kern.shared(1))  # reaches kern through a module attribute
+'''
+_KERN = '''
+    def shared(x):
+        """Shared helper."""
+        from .util import scale  # in-function import
 
-    import data_engineering_rag_spark.plans as plans
-
-    tree = ast.parse(inspect.getsource(plans))
-    for node in ast.walk(tree):
-        if (
-            isinstance(node, ast.AnnAssign)
-            and getattr(node.target, "id", "") == "LAST_CHANGED"
-        ):
-            keys = [k.value for k in node.value.keys]
-            dups = sorted({k for k in keys if keys.count(k) > 1})
-            assert not dups, f"duplicate LAST_CHANGED keys: {dups}"
-            return
-    raise AssertionError("LAST_CHANGED dict literal not found")
+        return scale(x) + 1
 
 
-def _load_digest_manifest() -> dict:
-    path = os.path.join(
-        REPO_ROOT, "data_engineering_rag_spark", "plans", "source_digests.json"
-    )
-    with open(path) as f:
-        return json.load(f)
+    def unreached(x):
+        return x - 1
+'''
+_UTIL = '''
+    FACTOR = 2
 
 
-def test_source_digests_current_or_ledger_bumped():
-    """Staleness-ledger automation (r14, VERDICT item 4): a registered
-    query whose result-producing source (AST minus docstrings/comments,
-    plus oracle SQL) drifted from the checked-in manifest MUST carry a
-    LAST_CHANGED bump past the manifest's recorded round. Fix by
-    bumping LAST_CHANGED in plans/__init__.py, then running
-    scripts/update_source_digests.py and committing both."""
-    from data_engineering_rag_spark.plans import (
-        source_digest,
-        staleness_ledger_violations,
-    )
-
-    manifest = _load_digest_manifest()
-    digests = {name: source_digest(spec) for name, spec in REGISTRY.items()}
-    missing, dead, unbumped, pending = staleness_ledger_violations(
-        manifest, digests, LAST_CHANGED
-    )
-    assert not missing, f"queries missing from source_digests.json: {missing}"
-    assert not dead, f"dead manifest rows (query removed): {dead}"
-    assert not unbumped, (
-        f"body changed without a LAST_CHANGED bump: {unbumped} — bump the "
-        f"ledger, then regenerate with scripts/update_source_digests.py"
-    )
-    assert not pending, (
-        f"regeneration pending (LAST_CHANGED bumped past the manifest's "
-        f"recorded round, so a LATER body edit would be invisible): "
-        f"{pending} — run scripts/update_source_digests.py and commit"
-    )
+    def scale(x):
+        return x * FACTOR
+'''
 
 
-def test_staleness_ledger_flags_synthetic_edit():
-    """The checker itself must go red on a synthetic body edit: digest
-    drift with an un-bumped ledger is a violation; drift WITH a bump is
-    not; doc-only edits produce no drift at all."""
-    import types
+def _synthetic_digest(tmp_path, pkg: str, oracle: str = "SELECT 1", **edits: tuple[str, str]) -> str:
+    """Digest of query ``q`` in a throwaway package ``pkg`` built from
+    the three sources above, each optionally edited by (old, new)."""
+    root = tmp_path / pkg
+    root.mkdir()
+    (root / "__init__.py").write_text("")
+    for mod, src in (("queries", _QUERIES), ("kern", _KERN), ("util", _UTIL)):
+        src = textwrap.dedent(src)
+        if mod in edits:
+            old, new = edits[mod]
+            assert old in src
+            src = src.replace(old, new)
+        (root / f"{mod}.py").write_text(src)
+    sys.path.insert(0, str(tmp_path))
+    importlib.invalidate_caches()
+    try:
+        fn = importlib.import_module(f"{pkg}.queries").q
+        return source_digests([QuerySpec(name="q", spark=fn, oracle=oracle)])["q"]
+    finally:
+        sys.path.remove(str(tmp_path))
+        for mod in [m for m in sys.modules if m == pkg or m.startswith(pkg + ".")]:
+            del sys.modules[mod]
 
-    from data_engineering_rag_spark.plans import (
-        QuerySpec,
-        source_digest,
-        staleness_ledger_violations,
-    )
 
-    manifest = {"q": {"digest": "aaaa", "last_changed": 5}}
-    # drift, ledger still at the recorded round -> violation
-    assert staleness_ledger_violations(manifest, {"q": "bbbb"}, {"q": 5}) == (
-        [], [], ["q"], []
-    )
-    # drift with a bump past the recorded round -> regeneration pending
-    # (ADVICE r15: the bump alone must not pass — committing it without
-    # update_source_digests.py would mask any LATER body edit)
-    assert staleness_ledger_violations(manifest, {"q": "bbbb"}, {"q": 6}) == (
-        [], [], [], ["q"]
-    )
-    # bump recorded into the manifest (post-regeneration) -> clean
-    manifest6 = {"q": {"digest": "bbbb", "last_changed": 6}}
-    assert staleness_ledger_violations(manifest6, {"q": "bbbb"}, {"q": 6}) == (
-        [], [], [], []
-    )
-    # pending even WITHOUT digest drift: a doc-only edit plus a bump
-    # still demands regeneration so the recorded round stays current
-    assert staleness_ledger_violations(manifest, {"q": "aaaa"}, {"q": 6}) == (
-        [], [], [], ["q"]
-    )
-    # new query not yet in the manifest / dead manifest row
-    assert staleness_ledger_violations(manifest, {"q": "aaaa", "new": "x"}, {})[0] == ["new"]
-    assert staleness_ledger_violations(manifest, {}, {})[1] == ["q"]
-
-    # and the digest itself: docstring/comment edits are invisible,
-    # body edits are not
-    ns: dict = {}
-    exec(
-        "def q1(spark, sf_dir):\n"
-        "    '''doc A'''\n"
-        "    # a comment\n"
-        "    return spark.range(1)\n",
-        ns,
-    )
-    exec(
-        "def q1(spark, sf_dir):\n"
-        "    '''doc B, totally rewritten'''\n"
-        "    return spark.range(1)\n",
-        ns.setdefault("_b", {}) or ns["_b"],
-    )
-    exec(
-        "def q1(spark, sf_dir):\n"
-        "    '''doc A'''\n"
-        "    return spark.range(2)\n",
-        ns.setdefault("_c", {}) or ns["_c"],
-    )
-    import inspect
-    import unittest.mock as mock
-
-    def dig(fn, oracle="SELECT 1"):
-        src_map = {
-            ns["q1"]: "def q1(spark, sf_dir):\n    '''doc A'''\n    # a comment\n    return spark.range(1)\n",
-            ns["_b"]["q1"]: "def q1(spark, sf_dir):\n    '''doc B, totally rewritten'''\n    return spark.range(1)\n",
-            ns["_c"]["q1"]: "def q1(spark, sf_dir):\n    '''doc A'''\n    return spark.range(2)\n",
-        }
-        with mock.patch.object(inspect, "getsource", lambda f: src_map[f]):
-            return source_digest(QuerySpec(name="q1", spark=fn, oracle=oracle))
-
-    base = dig(ns["q1"])
-    assert dig(ns["_b"]["q1"]) == base      # doc/comment edit: no drift
-    assert dig(ns["_c"]["q1"]) != base      # body edit: drift
-    assert dig(ns["q1"], oracle="SELECT 2") != base  # oracle edit: drift
+def test_source_digest_flags_synthetic_edits(tmp_path):
+    """A body edit, a shared-helper edit, a constant edit and an oracle
+    edit each change the digest; docstring, comment and unreached-code
+    edits do not."""
+    base = _synthetic_digest(tmp_path, "synth_base")
+    drift = {
+        "body": dict(queries=("kern.shared(1)", "kern.shared(2)")),
+        "helper": dict(util=("return x * FACTOR", "return x * FACTOR + 1")),
+        "constant": dict(util=("FACTOR = 2", "FACTOR = 3")),
+        "oracle": dict(oracle="SELECT 2"),
+    }
+    same = {
+        "docstrings": dict(queries=("Query docstring.", "Reworded."), kern=("Shared helper.", "Other.")),
+        "comments": dict(queries=("# reaches kern", "# now reaches kern"), kern=("# in-function", "# lazy")),
+        "unreached": dict(kern=("return x - 1", "return x - 2")),
+    }
+    for label, edits in drift.items():
+        assert _synthetic_digest(tmp_path, "synth_" + label, **edits) != base, f"{label} edit must drift"
+    for label, edits in same.items():
+        assert _synthetic_digest(tmp_path, "synth_" + label, **edits) == base, f"{label} edit must not drift"

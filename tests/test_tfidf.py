@@ -69,6 +69,28 @@ def test_search_scores_are_cosines(spark):
         assert abs(hits[d] - exp_score) < 1e-12, d
 
 
+def test_unpersist_releases_every_cached_table(spark):
+    """build_tfidf persists one tf table per field besides the weights
+    and idf; after unpersist() none of the RDDs the build persisted is
+    still persistent. Compared by RDD id, because the session's other
+    caches can be released by the context cleaner in the meantime."""
+    def persistent() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persistent()
+    df = spark.createDataFrame(
+        [(0, "spark join join", "a.md"), (1, "spark window", "b.md")],
+        ["doc_id", "content", "filename"],
+    )
+    model = build_tfidf(df, key_cols=["doc_id"], text_fields=["content", "filename"], persist=True)
+    model.weights.count()
+    model.idf.count()
+    built = persistent() - before
+    assert len(built) == 4  # weights, idf and one tf table per field
+    model.unpersist()
+    assert not persistent() & built
+
+
 def test_oov_query_terms_drop(spark):
     df = spark.createDataFrame(DOCS, ["doc_id", "text"])
     model = build_tfidf(df, key_cols=["doc_id"], text_fields=["text"])
