@@ -2,8 +2,8 @@
 probabilistic ranking alternative to the TF-IDF/cosine engine the
 reference embeds (``minsearch`` via ``zc_agent/search_tools.py:7-17``).
 Same build/search lifecycle and the same scale shape as
-``operators/tfidf.py``: the index IS a DataFrame keyed by term, search
-is a broadcast join of the tiny query-term table against it.
+``operators/tfidf.py``: the index IS a DataFrame keyed by term, and a
+search filters it to the query's terms and sums per doc.
 
 Formula (Robertson/Spärck Jones, the Lucene non-negative variant —
 public knowledge):
@@ -123,8 +123,9 @@ def search_bm25(
 ) -> DataFrame:
     """Top-k docs by summed BM25 weight over the query's DISTINCT terms.
 
-    The query-term table is a handful of rows → broadcast; the index
-    side never shuffles at query time. Ordering is by the ROUNDED
+    A weight row is one (doc, term), so the search is a term filter on
+    the weight table and a per-doc sum: no join, nothing to broadcast,
+    and the index side never shuffles. Ordering is by the ROUNDED
     (8 dp) score + key tie-breaks — same cross-engine k-boundary guard
     as ``tfidf.search_topk``."""
     terms = sorted(tokenize_query(query, model.token_mode))
@@ -132,9 +133,8 @@ def search_bm25(
         return model.weights.select(*model.key_cols).limit(0).withColumn(
             "score", F.lit(0.0)
         )
-    qt = spark.createDataFrame([(t,) for t in terms], ["term"])
     scored = (
-        model.weights.join(F.broadcast(qt), "term")
+        model.weights.where(F.col("term").isin(terms))
         .groupBy(*model.key_cols)
         .agg(F.round(F.sum("w"), 8).alias("score"))
     )

@@ -23,8 +23,10 @@ SQL-expressible arithmetic so the DuckDB oracle can verify):
 
 Scale design: the index IS a DataFrame — ``(field, term, <keys>, w)``
 with L2-normalized weights — partitionable by term, which is exactly the
-join key of the scoring query. Scoring broadcasts the tiny query-term
-table, so a search is: broadcast-hash-join on term (map-side, no
+join key of the scoring query. A search reads only the fitted tables:
+the query terms enter as a literal ``isin`` filter and a term → count
+map, the filtered idf rows give the query vector (a handful of rows),
+and that vector is broadcast into the filtered weights (map-side, no
 shuffle of the big index) → partial aggregation per doc key →
 ``TakeOrderedAndProject`` for global top-k. At 100 TB the only wide op
 in the build is the (term) and (doc) aggregations, both map-side
@@ -291,8 +293,11 @@ def search_topk(
 ) -> DataFrame:
     """Top-k docs by summed per-field cosine similarity.
 
-    The query-term table is a handful of rows → broadcast; the scoring
-    join never shuffles the index side.
+    The search reads only the model's two tables: the query terms filter
+    ``idf`` (a handful of rows, normed per field by a window) and
+    ``weights``, and the small query vector is broadcast into the
+    filtered weights, so the index side never shuffles. Lazy: nothing
+    runs until the caller acts on the result.
     """
     boosts = boosts or {}
     counts = tokenize_query(query, model.token_mode)
@@ -301,16 +306,17 @@ def search_topk(
             "score", F.lit(0.0)
         )
 
-    qt = spark.createDataFrame(
-        [(t, float(c)) for t, c in counts.items()], ["term", "qtf"]
-    )
+    # The query is two literal expressions, a term filter and a
+    # term → count map, so no local relation or Python RDD enters the plan.
+    terms = sorted(counts)
+    in_query = F.col("term").isin(terms)
+    qtf = F.create_map(*[F.lit(x) for t in terms for x in (t, float(counts[t]))])
     # Query vector per field: tf·idf from the fitted idf, L2-normalized.
-    q = qt.join(model.idf, "term").select(
-        "field", "term", (F.col("qtf") * F.col("idf")).alias("qw_raw")
-    )
-    qnorm = q.groupBy("field").agg(F.sqrt(F.sum(F.col("qw_raw") * F.col("qw_raw"))).alias("qnorm"))
-    qvec = q.join(qnorm, "field").select(
-        "field", "term", (F.col("qw_raw") / F.col("qnorm")).alias("qw")
+    qw_raw = qtf[F.col("term")] * F.col("idf")
+    qvec = model.idf.where(in_query).select(
+        "field",
+        "term",
+        (qw_raw / F.sqrt(F.sum(qw_raw * qw_raw).over(Window.partitionBy("field")))).alias("qw"),
     )
 
     boost_expr = F.lit(1.0)
@@ -318,7 +324,8 @@ def search_topk(
         boost_expr = F.when(F.col("field") == fname, F.lit(float(b))).otherwise(boost_expr)
 
     scored = (
-        model.weights.join(F.broadcast(qvec), ["field", "term"])
+        model.weights.where(in_query)
+        .join(F.broadcast(qvec), ["field", "term"])
         .select(*model.key_cols, (F.col("w") * F.col("qw") * boost_expr).alias("contrib"))
         .groupBy(*model.key_cols)
         .agg(F.sum("contrib").alias("score"))
@@ -340,9 +347,11 @@ def search_topk_batch(
     to X2): one broadcast of all query vectors, one pass over the index,
     ``row_number() OVER (PARTITION BY query)`` instead of a global sort.
     This is the shape that amortizes at scale — N queries cost one scan.
+    The query-term table is a literal ``inline`` over a one-row range,
+    so it is built in the JVM, never by Python workers.
     """
     rows = [
-        (qid, term, float(cnt))
+        F.struct(F.lit(qid), F.lit(term), F.lit(float(cnt)))
         for qid, q in queries
         for term, cnt in tokenize_query(q, model.token_mode).items()
     ]
@@ -350,7 +359,11 @@ def search_topk_batch(
         return model.weights.select(*model.key_cols).limit(0).select(
             F.lit(0).alias("query_id"), *model.key_cols, F.lit(0.0).alias("score")
         )
-    qt = spark.createDataFrame(rows, ["query_id", "term", "qtf"])
+    # The cast names the columns and keeps them nullable: query_id is a
+    # nullable bigint in the output schema callers see.
+    qt = spark.range(1).select(
+        F.inline(F.array(*rows).cast("array<struct<query_id:bigint,term:string,qtf:double>>"))
+    )
     q = qt.join(model.idf, "term").select(
         "query_id", "field", "term", (F.col("qtf") * F.col("idf")).alias("qw_raw")
     )

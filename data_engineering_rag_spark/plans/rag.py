@@ -518,9 +518,9 @@ def _bm25_search_oracle(query_text: str, k: int) -> str:
 @query("bm25_search_topk", _bm25_search_oracle(SEARCH_QUERY, SEARCH_K))
 def bm25_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 top-k over the chunked corpus — same fit→search
-    lifecycle and the same physical shape as the TF-IDF flagship
-    (broadcast query terms → hash join on term → partial agg →
-    TakeOrderedAndProject), with BM25's tf saturation and length
+    lifecycle as the TF-IDF flagship, with a simpler search (query-term
+    filter on the weights → partial agg → TakeOrderedAndProject, no
+    join), and with BM25's tf saturation and length
     normalization folded into the precomputed index weights
     (``operators/bm25.py``)."""
     from ..operators.bm25 import build_bm25, search_bm25
